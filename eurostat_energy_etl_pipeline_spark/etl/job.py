@@ -19,7 +19,7 @@ import argparse
 from datetime import datetime, timezone
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 MODES = ("append", "truncate", "full-refresh", "merge")
@@ -200,7 +200,7 @@ def merge_warehouse_jdbc(
         conn.close()
 
 
-def write_warehouse(df: DataFrame, warehouse_dir: str, mode: str) -> None:
+def write_warehouse(df: DataFrame, warehouse_dir: str, mode: str) -> int:
     """K1-K3 + incremental merge against the parquet warehouse.
 
     `merge` is the upsert the reference can't express (its loads are all
@@ -212,10 +212,17 @@ def write_warehouse(df: DataFrame, warehouse_dir: str, mode: str) -> None:
     would use a transactional format (Delta/Iceberg MERGE = new files +
     metadata swap); this is the same plan shape over plain parquet, with the
     affected-partition remainder staged via localCheckpoint so the read and
-    the overwrite of the same path don't collide."""
+    the overwrite of the same path don't collide.
+
+    Returns ``df``'s row count. An Observation counts the batch where it
+    enters the written relation, exactly once per plan, and the action
+    that writes fills it (in ``merge``, the staging checkpoint): counting
+    costs no job of its own."""
     if mode not in MODES:
         raise ValueError(f"mode must be one of {MODES}, got {mode!r}")
-    out = df.withColumn("year", F.year("time"))
+    batch = df.withColumn("year", F.year("time"))
+    rows = Observation()
+    out = batch.observe(rows, F.count(F.lit(1)).alias("rows"))
     write_mode = "append" if mode == "append" else "overwrite"
     writer_opts = {}
     if mode == "merge":
@@ -229,11 +236,13 @@ def write_warehouse(df: DataFrame, warehouse_dir: str, mode: str) -> None:
             # Partition-prune the scan to the batch's footprint, then drop
             # rows whose natural key the batch replaces. Both join sides the
             # batch contributes are broadcast-sized (it's one API response).
-            parts = out.select("dataset_code", "year").distinct()
+            # They read the unobserved `batch`, so the row-count Observation
+            # stays on the one branch that is written.
+            parts = batch.select("dataset_code", "year").distinct()
             affected = existing.join(
                 F.broadcast(parts), ["dataset_code", "year"], "left_semi"
             )
-            keys = out.select(*MERGE_KEY).distinct()
+            keys = batch.select(*MERGE_KEY).distinct()
             cond = reduce(
                 lambda a, b: a & b,
                 [affected[k].eqNullSafe(keys[k]) for k in MERGE_KEY],
@@ -251,6 +260,7 @@ def write_warehouse(df: DataFrame, warehouse_dir: str, mode: str) -> None:
     for k, v in writer_opts.items():
         writer = writer.option(k, v)
     writer.parquet(warehouse_dir)
+    return rows.get["rows"]
 
 
 def read_warehouse(spark: SparkSession, warehouse_dir: str) -> DataFrame:
@@ -265,11 +275,12 @@ def run_etl(
     load_ts: datetime | None = None,
 ) -> int:
     """Full load: union batches (U1) -> clean -> stamp -> write. Returns the
-    loaded row count (the reference's 'Loaded N rows' telemetry)."""
+    loaded row count (the reference's 'Loaded N rows' telemetry): the
+    batch's rows after clean, as counted by the execution that writes
+    (see `write_warehouse`), so the batch is never executed a second time
+    just to be counted."""
     full = reduce(DataFrame.unionByName, batches)
-    out = stamp(clean(full), load_ts)
-    write_warehouse(out, warehouse_dir, mode)
-    return out.count()
+    return write_warehouse(stamp(clean(full), load_ts), warehouse_dir, mode)
 
 
 def wait_for(check, retries: int = 20, delay: float = 5.0, sleep=None) -> bool:

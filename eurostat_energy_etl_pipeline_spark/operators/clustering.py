@@ -37,22 +37,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from eurostat_energy_etl_pipeline_spark.functions.numeric import portable_round
-
-
-def _sq_dist(vec: Column, cent: list[float]) -> Column:
-    """Left-fold sum of squared component differences — the element-order
-    arithmetic DuckDB's `list_sum(list_transform(...))` also performs, so
-    both engines produce bit-identical doubles."""
-    lit = F.array(*[F.lit(float(x)) for x in cent])
-    return F.aggregate(
-        F.zip_with(vec.cast("array<double>"), lit, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
 
 
 def assign_cells(

@@ -504,9 +504,10 @@ def label_propagation(
     within k hops of whom") in EXACTLY k join rounds — the shape used
     for neighborhood features and influence-radius audits where the
     fixpoint is not wanted. Each round is one node-keyed equi-join +
-    one map-side-combined MIN aggregate; labels are node-id strings
-    compared bytewise in both engines (UTF8_BINARY / DuckDB binary
-    collation). The driver holds only the loop counter."""
+    one map-side-combined MIN aggregate; labels are the order-isomorphic
+    int64 node codes (:func:`_enc_node`), so min over codes picks the
+    same node as the oracle's bytewise min over 'c'/'s' id strings.
+    The driver holds only the loop counter."""
     lab = nodes.select("node", F.col("node").alias("label"))
     # r14: shuffled-hash joins for both per-round joins — the pinned edge
     # table streams unsorted (SMJ re-sorted all |E| cached rows every

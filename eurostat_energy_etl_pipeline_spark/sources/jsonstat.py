@@ -1,32 +1,39 @@
 """Eurostat JSON-stat dense-cube source adapter (S1-S5).
 
-The reference decodes the cube with a per-cell Python loop on the driver
-(/root/reference/etl/main.py:84-125). Here the *header* (dimension labels,
-sizes — a few KB) is parsed driver-side, while the O(cells) work — flat-index
-unraveling, label resolution, allow-list filtering — is a Spark plan over the
-(flat_index, value) pairs:
+One pure-Python kernel, `decode_document`, turns a parsed payload into
+observation tuples: row-major unravel of each flat cell index (last
+dimension fastest), label resolution with fallback to the code (S4), the
+indicator allow-list (P8/J2), year -> date (P3) and the float value (P2).
+Both ingest paths share it, so there is one decode to keep correct:
 
-- unravel: integer div/mod per dimension (pure arithmetic, codegen);
-- label resolution (S4): `create_map` literals for the tiny per-dim label
-  dicts — constant-folded broadcast lookup, no join needed;
-- indicator allow-list (P8/J2): `isin` semi-join semantics.
+- `decode_jsonstat` (single document): the payload is already a dict in
+  driver memory, so the kernel runs there and the rows enter Spark as an
+  Arrow local relation. The plan is a `LocalTableScan`: executing the
+  frame, as often as a load re-reads its batch, starts no Python worker.
+- `spark.read.format("jsonstat")` (sources/jsonstat_datasource.py, many
+  documents): the same kernel runs executor-side, one input partition
+  per document.
 
-The HTTP fetch itself (S1) stays driver-side by design: the payload is tiny
-and the decode is where the data-parallel work is. `fetch_jsonstat` is the
-(requests-based) integration point; `decode_jsonstat` is pure and testable
-against the frozen fixture (FIXTURES.md §3.1).
+The HTTP fetch itself (S1) stays driver-side by design: the payload is
+KB-scale. `fetch_jsonstat` is the (requests-based) integration point;
+`decode_jsonstat` is pure and testable against the frozen fixture
+(FIXTURES.md §3.1).
 """
 
 from __future__ import annotations
 
 import math
+from collections.abc import Iterator
+from datetime import date
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
+    DateType,
     DoubleType,
-    LongType,
+    StringType,
     StructField,
     StructType,
 )
@@ -48,6 +55,17 @@ OBSERVATION_COLUMNS = (
     "value",
 )
 
+OBSERVATION_SCHEMA = StructType(
+    [
+        StructField(
+            c,
+            DateType() if c == "time" else DoubleType() if c == "value" else StringType(),
+        )
+        for c in OBSERVATION_COLUMNS
+    ]
+)
+_ARROW_SCHEMA = to_arrow_schema(OBSERVATION_SCHEMA)
+
 
 def validate(payload: dict[str, Any]) -> bool:
     """S2: response-shape guard (/root/reference/etl/main.py:79-81)."""
@@ -67,8 +85,7 @@ def find_indicator_dim(
 
 
 def fetch_jsonstat(url: str) -> dict[str, Any]:
-    """S1: driver-side HTTP GET (payload is KB-scale; the decode is the
-    distributed part)."""
+    """S1: driver-side HTTP GET (the payload is KB-scale)."""
     import requests  # local import: optional dependency
 
     return requests.get(url, timeout=60).json()
@@ -81,6 +98,65 @@ def _codes_by_position(payload: dict[str, Any], dim: str) -> dict[int, str]:
     return {pos: code for code, pos in index.items()}
 
 
+def decode_document(
+    payload: dict[str, Any], dataset_code: str, indicators=DEFAULT_INDICATORS
+) -> Iterator[tuple]:
+    """Decode one JSON-stat document into observation tuples, in
+    OBSERVATION_COLUMNS order (the reference's per-cell loop,
+    etl/main.py:84-125).
+
+    Yields nothing when the payload fails validation or lacks an
+    indicator, geo or time dimension (S2's empty-result contract)."""
+    if not validate(payload):
+        return
+    dims: list[str] = payload["id"]
+    sizes: list[int] = payload["size"]
+    ind_dim = find_indicator_dim(payload, indicators)
+    if ind_dim is None or "geo" not in dims or "time" not in dims:
+        return
+
+    # Row-major unravel, last dim fastest (etl/main.py:97-102):
+    # coord_d = (flat // prod(sizes[d+1:])) % sizes[d]
+    axes = {
+        d: (
+            math.prod(sizes[i + 1 :]),
+            sizes[i],
+            _codes_by_position(payload, d),
+            payload["dimension"][d]["category"].get("label", {}),
+        )
+        for i, d in enumerate(dims)
+    }
+    allow = set(indicators)
+    unit_dim = "unit" if "unit" in dims else None
+
+    def code_label(d: str, flat: int) -> tuple[str, str]:
+        stride, size, codes, labels = axes[d]
+        c = codes[(flat // stride) % size]
+        return c, labels.get(c, c)  # label falls back to code (etl/main.py:118)
+
+    for k, v in payload["value"].items():
+        flat = int(k)
+        ind_code, ind_label = code_label(ind_dim, flat)
+        if ind_code not in allow:
+            continue
+        geo_code, geo_label = code_label("geo", flat)
+        time_code, _ = code_label("time", flat)
+        unit_code, unit_label = (
+            code_label(unit_dim, flat) if unit_dim else (None, None)
+        )
+        yield (
+            dataset_code,
+            geo_code,
+            geo_label,
+            ind_code,
+            ind_label,
+            unit_code,
+            unit_label,
+            date(int(time_code), 1, 1),
+            float(v),
+        )
+
+
 def decode_jsonstat(
     spark: SparkSession,
     payload: dict[str, Any],
@@ -89,93 +165,14 @@ def decode_jsonstat(
 ) -> DataFrame:
     """Decode a JSON-stat dense cube into observation rows.
 
-    Returns an empty DataFrame with the declared schema when the payload
-    fails validation (S2's empty-result contract)."""
-    schema = StructType(
-        [StructField("flat_idx", LongType()), StructField("value", DoubleType())]
-    )
-    empty_out = spark.createDataFrame([], _out_schema())
-    if not validate(payload):
-        return empty_out
-
-    dims: list[str] = payload["id"]
-    sizes: list[int] = payload["size"]
-    data = [(int(k), float(v)) for k, v in payload["value"].items()]
-    # Size the Python-side slice count to the data, not defaultParallelism:
-    # a plain createDataFrame pickles the rows into one RDD partition PER
-    # CORE, and every partition costs a Python-worker round-trip at each
-    # execution — a 8-row cube sliced 32 ways costs 32 round-trips (~5 s
-    # when a downstream coalesce serializes them into one task). ~50k rows
-    # per slice keeps big cubes parallel and small ones single-slice.
-    n_slices = max(1, min(len(data) // 50_000 + 1, 32))
-    cells = spark.createDataFrame(
-        spark.sparkContext.parallelize(data, n_slices), schema
-    )
-
-    # Row-major unravel, last dim fastest (/root/reference/etl/main.py:97-102):
-    # coord_d = (flat_idx // prod(sizes[d+1:])) % sizes[d]
-    out = cells
-    for d, dim in enumerate(dims):
-        stride = math.prod(sizes[d + 1 :])
-        # Integer `div`, matching the pure-Python kernel's `//` exactly —
-        # double division loses exactness for flat_idx above 2^53.
-        coord = F.expr(f"flat_idx div {stride}") % sizes[d]
-        codes = _codes_by_position(payload, dim)
-        labels = payload["dimension"][dim]["category"].get("label", {})
-        code_map = F.create_map(
-            *[x for pos, code in codes.items() for x in (F.lit(pos), F.lit(code))]
-        )
-        code_col = code_map.getItem(coord)
-        out = out.withColumn(f"__code_{dim}", code_col)
-        if labels:
-            label_map = F.create_map(
-                *[x for code, lab in labels.items() for x in (F.lit(code), F.lit(lab))]
-            )
-            # Fallback to the code when no label exists (etl/main.py:118)
-            out = out.withColumn(
-                f"__label_{dim}", F.coalesce(label_map.getItem(code_col), code_col)
-            )
-        else:
-            out = out.withColumn(f"__label_{dim}", code_col)
-
-    ind_dim = find_indicator_dim(payload, indicators)
-    geo_dim = "geo" if "geo" in dims else None
-    time_dim = "time" if "time" in dims else None
-    unit_dim = "unit" if "unit" in dims else None
-    if ind_dim is None or geo_dim is None or time_dim is None:
-        return empty_out
-
-    def code(d):
-        return F.col(f"__code_{d}")
-
-    def label(d):
-        return F.col(f"__label_{d}")
-
-    null_s = F.lit(None).cast("string")
-    return (
-        out.where(code(ind_dim).isin(list(indicators)))  # P8 allow-list
-        .select(
-            F.lit(dataset_code).alias("dataset_code"),
-            code(geo_dim).alias("country_code"),
-            label(geo_dim).alias("country_name"),
-            code(ind_dim).alias("indicator_code"),
-            label(ind_dim).alias("indicator_label"),
-            (code(unit_dim) if unit_dim else null_s).alias("unit_code"),
-            (label(unit_dim) if unit_dim else null_s).alias("unit_label"),
-            F.to_date(code(time_dim), "yyyy").alias("time"),  # P3
-            F.col("value").cast("double").alias("value"),  # P2
-        )
-    )
-
-
-def _out_schema() -> StructType:
-    from pyspark.sql.types import DateType, StringType
-
-    fields = [
-        StructField(c, DateType() if c == "time" else (DoubleType() if c == "value" else StringType()))
-        for c in OBSERVATION_COLUMNS
-    ]
-    return StructType(fields)
+    `decode_document` runs on the driver and its rows ship as an Arrow
+    local relation (`LocalTableScan`, no Python-worker stage). Returns an
+    empty DataFrame with the declared schema when the payload fails
+    validation or lacks an indicator, geo or time dimension (S2)."""
+    rows = list(decode_document(payload, dataset_code, indicators))
+    columns = zip(*rows) if rows else [()] * len(OBSERVATION_COLUMNS)
+    table = pa.table(dict(zip(OBSERVATION_COLUMNS, columns)), schema=_ARROW_SCHEMA)
+    return spark.createDataFrame(table, OBSERVATION_SCHEMA)
 
 
 # Frozen §3.1 golden payload (FIXTURES.md) — a 2x3x2 dense cube with a sparse

@@ -1,14 +1,15 @@
 """`spark.read.format("jsonstat")` — a Spark 4 Python DataSource for
 JSON-stat dense-cube documents (SURVEY §2.1 S1's "idiomatic form").
 
-`decode_jsonstat` (sources/jsonstat.py) is the single-document path: header
-parsed on the driver, cell decode as a Catalyst plan. This DataSource is the
-multi-document ingest path: every *.json file under the load path becomes
-one input partition, so a directory of saved API responses (the natural
-shape of a scheduled extract at scale) decodes executor-side in parallel
-with no driver involvement per document. Both paths share the same header
-helpers and produce the same 9-column observation schema, so downstream
-plans are source-agnostic.
+`decode_jsonstat` (sources/jsonstat.py) is the single-document path: the
+payload is already in driver memory, so it is decoded there and shipped as
+an Arrow local relation. This DataSource is the multi-document ingest
+path: every *.json file under the load path becomes one input partition,
+so a directory of saved API responses (the natural shape of a scheduled
+extract at scale) decodes executor-side in parallel with no driver
+involvement per document. Both paths run the one kernel,
+`jsonstat.decode_document`, and produce the same 9-column observation
+schema, so downstream plans are source-agnostic.
 
 Usage:
     register_jsonstat_source(spark)   # once per session
@@ -22,22 +23,15 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Iterator
-from datetime import date
 
 from pyspark.sql import SparkSession
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.types import StructType
 
 from eurostat_energy_etl_pipeline_spark.sources.jsonstat import (
     DEFAULT_INDICATORS,
-    _codes_by_position,
-    find_indicator_dim,
-    validate,
-)
-
-JSONSTAT_SCHEMA = (
-    "dataset_code string, country_code string, country_name string, "
-    "indicator_code string, indicator_label string, unit_code string, "
-    "unit_label string, time date, value double"
+    OBSERVATION_SCHEMA,
+    decode_document,
 )
 
 
@@ -45,62 +39,6 @@ class _FilePartition(InputPartition):
     def __init__(self, path: str, dataset_code: str):
         self.path = path
         self.dataset_code = dataset_code
-
-
-def decode_document(
-    payload: dict, dataset_code: str, indicators=DEFAULT_INDICATORS
-) -> Iterator[tuple]:
-    """Pure-Python single-document decode (executor-side kernel).
-
-    Same semantics as the Catalyst path in decode_jsonstat: row-major
-    unravel (last dim fastest), label fallback to code, indicator
-    allow-list, year->date, float cast. Yields nothing for invalid payloads
-    (S2's empty contract)."""
-    if not validate(payload):
-        return
-    dims: list[str] = payload["id"]
-    sizes: list[int] = payload["size"]
-    ind_dim = find_indicator_dim(payload, indicators)
-    if ind_dim is None or "geo" not in dims or "time" not in dims:
-        return
-
-    codes = {d: _codes_by_position(payload, d) for d in dims}
-    labels = {
-        d: payload["dimension"][d]["category"].get("label", {}) for d in dims
-    }
-    strides: dict[str, int] = {}
-    acc = 1
-    for d in reversed(dims):
-        strides[d] = acc
-        acc *= sizes[dims.index(d)]
-    allow = set(indicators)
-    unit_dim = "unit" if "unit" in dims else None
-
-    def code_label(d: str, flat: int) -> tuple[str, str]:
-        c = codes[d][(flat // strides[d]) % sizes[dims.index(d)]]
-        return c, labels[d].get(c, c)
-
-    for k, v in payload["value"].items():
-        flat = int(k)
-        ind_code, ind_label = code_label(ind_dim, flat)
-        if ind_code not in allow:
-            continue
-        geo_code, geo_label = code_label("geo", flat)
-        time_code, _ = code_label("time", flat)
-        unit_code, unit_label = (
-            code_label(unit_dim, flat) if unit_dim else (None, None)
-        )
-        yield (
-            dataset_code,
-            geo_code,
-            geo_label,
-            ind_code,
-            ind_label,
-            unit_code,
-            unit_label,
-            date(int(time_code), 1, 1),
-            float(v),
-        )
 
 
 class JsonStatReader(DataSourceReader):
@@ -139,8 +77,8 @@ class JsonStatDataSource(DataSource):
     def name(cls) -> str:
         return "jsonstat"
 
-    def schema(self) -> str:
-        return JSONSTAT_SCHEMA
+    def schema(self) -> StructType:
+        return OBSERVATION_SCHEMA
 
     def reader(self, schema) -> JsonStatReader:
         return JsonStatReader(self.options)

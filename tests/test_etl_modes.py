@@ -105,6 +105,24 @@ def test_merge_upserts_and_preserves_untouched_partitions(spark, tmp_path):
     assert read_warehouse(spark, wh2).count() == 5
 
 
+def test_run_etl_returns_cleaned_batch_rows(spark, tmp_path):
+    """The returned count is the batch's rows after clean in every mode:
+    duplicates are not counted, and a merge counts its batch, not the
+    partition survivors it rewrites alongside."""
+    from pyspark.sql import functions as F
+
+    wh = str(tmp_path / "obs")
+    batch = _batch(spark)
+    twice = [batch, batch]  # 10 rows, 5 after dedupe
+    assert run_etl(spark, twice, wh, "full-refresh") == 5
+    assert run_etl(spark, twice, wh, "append") == 5
+    # a new key in the year-2021 partition, which holds C1 twice
+    new_key = batch.where("country_code = 'C1'").withColumn("country_code", F.lit("C9"))
+    assert run_etl(spark, [new_key, new_key], wh, "merge") == 1
+    assert read_warehouse(spark, wh).count() == 11
+    assert run_etl(spark, twice, wh, "truncate") == 5
+
+
 def test_merge_null_unit_key_is_null_safe(spark, tmp_path):
     """A NULL unit_code survives cleaning (FIXTURES §3.3); merging the same
     NULL-unit key must UPDATE that row, not duplicate it."""

@@ -103,7 +103,8 @@ def test_dataset_code_stamped(decoded):
 
 def test_datasource_format_matches_decode(spark, tmp_path):
     """spark.read.format('jsonstat') over a directory of documents produces
-    the same rows as the Catalyst decode path, one partition per file."""
+    the same rows as the single-document decode path, one partition per
+    file."""
     from eurostat_energy_etl_pipeline_spark.sources.jsonstat import decode_jsonstat
     from eurostat_energy_etl_pipeline_spark.sources.jsonstat_datasource import (
         register_jsonstat_source,

@@ -1265,3 +1265,66 @@ def test_q186_one_signature_pass_feeds_all_branches(spark, queries):
     assert "BroadcastHashJoin" in plan  # cluster map broadcast
     assert plan.count("SortMergeJoin") <= 2
     assert "CartesianProduct" not in plan
+
+
+# Physical operators that run Python code in a worker process.
+PYTHON_EXEC_NODES = (
+    "BatchEvalPython",
+    "ArrowEvalPython",
+    "MapInPandas",
+    "MapInArrow",
+    "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas",
+    "AggregateInPandas",
+    "WindowInPandas",
+)
+
+
+def test_decode_jsonstat_is_arrow_local_scan(spark):
+    """The single-document JSON-stat decode is the q93 contract applied
+    to ingest: the driver-decoded rows ship as an Arrow LocalTableScan,
+    never a python-RDD scan or a Python-worker stage, so a load that
+    re-reads its batch pays no worker round-trip."""
+    from eurostat_energy_etl_pipeline_spark.sources.jsonstat import (
+        GOLDEN_FIXTURE,
+        decode_jsonstat,
+    )
+
+    plan = plan_of(decode_jsonstat(spark, GOLDEN_FIXTURE, "nrg_cb_e"))
+    assert "LocalTableScan" in plan
+    assert "Scan ExistingRDD" not in plan
+    for node in PYTHON_EXEC_NODES:
+        assert node not in plan, node
+
+
+def test_run_etl_counts_rows_without_extra_jobs(spark, tmp_path):
+    """run_etl takes its row count from the execution that writes: a
+    full-refresh load launches no more Spark jobs than a bare
+    write_warehouse of the same stamped frame, and still returns the
+    batch's rows after clean."""
+    from eurostat_energy_etl_pipeline_spark.etl.job import (
+        clean,
+        run_etl,
+        stamp,
+        write_warehouse,
+    )
+    from eurostat_energy_etl_pipeline_spark.sources.jsonstat import (
+        GOLDEN_FIXTURE,
+        decode_jsonstat,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    frame = decode_jsonstat(spark, GOLDEN_FIXTURE, "nrg_cb_e")
+    try:
+        sc.setJobGroup("plan-quality-bare-write", "bare write_warehouse")
+        write_warehouse(stamp(clean(frame)), str(tmp_path / "bare"), "full-refresh")
+        sc.setJobGroup("plan-quality-run-etl", "run_etl full-refresh")
+        n = run_etl(spark, [frame], str(tmp_path / "etl"), "full-refresh")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bare = len(tracker.getJobIdsForGroup("plan-quality-bare-write"))
+    etl = len(tracker.getJobIdsForGroup("plan-quality-run-etl"))
+    assert n == 5
+    assert 0 < etl <= bare, (etl, bare)

@@ -1,17 +1,20 @@
 """Property-based differential tests (hypothesis) — SURVEY §5 notes the
 reference has zero property tests; these close that gap where it matters
-most: the two independent JSON-stat decode implementations (Catalyst
-expression path vs the DataSource's pure-Python kernel) must agree on ANY
-valid cube, and the text fingerprint must be invariant under the
-normalizations it claims."""
+most: the one JSON-stat decode kernel (run on the driver by
+`decode_jsonstat`, which ships its rows as an Arrow local relation, and
+executor-side by the `jsonstat` DataSource) must agree on ANY valid cube
+with an independent reference written here (numpy's row-major
+`unravel_index` plus a dict label lookup), and the text fingerprint must be
+invariant under the normalizations it claims."""
 
-import pytest
+import numpy as np
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from eurostat_energy_etl_pipeline_spark.sources.jsonstat import decode_jsonstat
-from eurostat_energy_etl_pipeline_spark.sources.jsonstat_datasource import (
+from eurostat_energy_etl_pipeline_spark.sources.jsonstat import (
+    DEFAULT_INDICATORS,
     decode_document,
+    decode_jsonstat,
 )
 
 GEOS = ["DE", "FR", "IT", "ZZ"]
@@ -65,6 +68,29 @@ def jsonstat_cubes(draw):
     }
 
 
+def reference_decode(cube, indicators=DEFAULT_INDICATORS):
+    """Independent decode of a `jsonstat_cubes` cube: numpy's row-major
+    `unravel_index` over `size`, codes by position from the list- or
+    dict-form index, and a dict label lookup that falls back to the code.
+    Yields (country_code, indicator_code, time ISO date, value,
+    country_name)."""
+    dims = cube["id"]
+    by_pos, labels = {}, {}
+    for d in dims:
+        category = cube["dimension"][d]["category"]
+        index = category["index"]
+        by_pos[d] = index if isinstance(index, list) else sorted(index, key=index.get)
+        labels[d] = category.get("label", {})
+    for k, v in cube["value"].items():
+        coords = np.unravel_index(int(k), cube["size"])
+        code = {d: by_pos[d][int(c)] for d, c in zip(dims, coords)}
+        if code["nrg_bal"] in indicators:
+            geo = code["geo"]
+            time_iso = f"{code['time']}-01-01"
+            name = labels["geo"].get(geo, geo)
+            yield (geo, code["nrg_bal"], time_iso, float(v), name)
+
+
 @settings(
     max_examples=12,
     deadline=None,
@@ -72,8 +98,10 @@ def jsonstat_cubes(draw):
 )
 @given(cube=jsonstat_cubes())
 def test_decode_paths_agree(spark, cube):
-    """Catalyst decode ≡ pure-Python DataSource kernel on any valid cube."""
-    catalyst = sorted(
+    """The decode kernel, directly and through decode_jsonstat's Arrow
+    local relation, ≡ the independent numpy reference on any valid cube."""
+    reference = sorted(reference_decode(cube))
+    spark_rows = sorted(
         (
             (r.country_code, r.indicator_code, str(r.time), r.value, r.country_name)
             for r in decode_jsonstat(spark, cube, "ds").collect()
@@ -85,7 +113,8 @@ def test_decode_paths_agree(spark, cube):
             for row in decode_document(cube, "ds")
         )
     )
-    assert catalyst == kernel
+    assert spark_rows == reference
+    assert kernel == reference
 
 
 @settings(max_examples=20, deadline=None)
