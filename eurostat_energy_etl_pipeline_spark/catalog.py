@@ -20,6 +20,8 @@ from typing import Callable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from eurostat_energy_etl_pipeline_spark.artifacts import session_value
+
 TABLES = (
     "region",
     "nation",
@@ -164,44 +166,25 @@ def _normalize_table(name: str, df: DataFrame) -> DataFrame:
     return df
 
 
-# Table-handle memo per (SparkContext, sf_dir): resolving a parquet footer
-# + schema analysis is pure catalog overhead that a real metastore pays
-# once, so we pay it once per session too. The testdata dirs are immutable,
-# so the handles never go stale.
-_TABLE_CACHE: dict[tuple[str, str], TableCatalog] = {}
-
-
 def load_tables(spark: SparkSession, sf_dir: str) -> TableCatalog:
-    """Lazy parquet handles for every driver table, memoized per session.
-    Column pruning and filter pushdown happen per-query via Catalyst;
-    nothing is materialized here. Also hardens the incoming session with
-    the runtime confs the fixtures require (see ensure_session_confs) —
-    the caller may hand us a plain SparkSession."""
+    """Lazy parquet handles for every driver table, memoized per session
+    (a real metastore resolves footers and schemas once, too; the testdata
+    dirs are immutable, so the handles never go stale). Column pruning and
+    filter pushdown happen per-query via Catalyst; nothing is materialized
+    here. Also hardens the incoming session with the runtime confs the
+    fixtures require (see ensure_session_confs) — the caller may hand us a
+    plain SparkSession."""
     ensure_session_confs(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _TABLE_CACHE.get(key)
-    if cached is None:
-        cached = TableCatalog(spark, sf_dir)
-        _TABLE_CACHE[key] = cached
-    return cached
-
-
-# Derived-view cache (SURVEY §2.9 T4): the reference caches its warehouse
-# scan per process (st.cache_data) and its TF-IDF index per process
-# (lru_cache). The engine analog is a persisted (MEMORY_AND_DISK) DataFrame
-# per derived view, built once per session. At warehouse scale the same hook
-# points at a materialized table instead; the plans on top are unchanged.
-_VIEW_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+    return session_value(spark, sf_dir, "tables", lambda: TableCatalog(spark, sf_dir))
 
 
 def cached_view(name, spark: SparkSession, sf_dir: str, build) -> DataFrame:
-    """Memoize + `.cache()` a derived DataFrame per (session, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _VIEW_CACHE.get(key)
-    if df is None:
-        df = build().cache()
-        _VIEW_CACHE[key] = df
-    return df
+    """Memoize + `.cache()` a derived DataFrame per (session, sf_dir) —
+    the engine analog of the reference's per-process warehouse scan cache
+    (st.cache_data; SURVEY §2.9 T4). At warehouse scale the same hook
+    points at a materialized table instead; the plans on top are
+    unchanged."""
+    return session_value(spark, sf_dir, f"view:{name}", lambda: build().cache())
 
 
 def observations_view(spark: SparkSession, sf_dir: str) -> DataFrame:

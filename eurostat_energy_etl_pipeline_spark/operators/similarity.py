@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from eurostat_energy_etl_pipeline_spark.artifacts import session_value
 from eurostat_energy_etl_pipeline_spark.functions.parallelism import widen_if_narrow
 
 
@@ -120,27 +121,23 @@ def bucket_of(vec_col: Column, planes: np.ndarray) -> Column:
     return out.cast("int")
 
 
-# Inferred-dim memo per (session, input plan, column): the LIMIT-1 probe is
-# cheap but it IS a job; don't re-run it for every bucket/top-k call on the
-# same corpus.
-_DIM_CACHE: dict[tuple, int] = {}
-
-
 def embedding_dim(df: DataFrame, vec_col: str = "embedding") -> int:
     """Embedding width, read from one row (a LIMIT-1 scan, not a full pass).
-    Raises on an empty corpus rather than guessing."""
+    Raises on an empty corpus rather than guessing. The probe is cheap but
+    it IS a job, so the width is a session value per input plan and column:
+    bucket/top-k calls on the same corpus don't re-run it."""
+
+    def probe() -> int:
+        row = df.select(F.size(F.col(vec_col)).alias("d")).first()
+        if row is None or row["d"] is None or row["d"] <= 0:
+            raise ValueError(f"cannot infer embedding dim from column {vec_col!r}")
+        return int(row["d"])
+
     try:
-        key = (df.sparkSession.sparkContext.applicationId, df.semanticHash(), vec_col)
+        plan = str(df.semanticHash())
     except Exception:
-        key = None
-    if key is not None and key in _DIM_CACHE:
-        return _DIM_CACHE[key]
-    row = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    if row is None or row["d"] is None or row["d"] <= 0:
-        raise ValueError(f"cannot infer embedding dim from column {vec_col!r}")
-    if key is not None:
-        _DIM_CACHE[key] = int(row["d"])
-    return int(row["d"])
+        return probe()
+    return session_value(df.sparkSession, plan, f"embedding_dim:{vec_col}", probe)
 
 
 def with_lsh_bucket(

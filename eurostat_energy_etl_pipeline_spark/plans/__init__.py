@@ -16,6 +16,16 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from eurostat_energy_etl_pipeline_spark import artifacts
+from eurostat_energy_etl_pipeline_spark.artifacts import (  # noqa: F401
+    at_rest,
+    checkpoint_ids,
+    checkpoint_users,
+    pin,
+    plan_checkpoint,
+    release_pins,
+)
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
 
@@ -69,154 +79,16 @@ def drop_plan(name: str) -> int:
     single query is large. Dropping the plan after its comparison lets
     ContextCleaner GC all of it; repeated-workload harnesses (bench)
     keep the cache, which is the whole point of the memo. Session-
-    lifetime caches (catalog cached_view, prepared graphs, at-rest
-    index memos) are deliberately untouched — they are the bounded,
-    intended long-lived state."""
+    lifetime artifacts (``artifacts.session_value``/``session_table``)
+    are not plan state and stay until the session stops."""
     with _PLAN_CACHE_LOCK:
         keys = [k for k in _PLAN_CACHE if k[2] == name]
         for k in keys:
             del _PLAN_CACHE[k]
-    # the plan is gone, so its plan-lifetime checkpoint declaration no
-    # longer describes anything live (ADVICE r13: don't let stale entries
-    # keep the lifetime gate lenient forever)
-    with _PINNED_LOCK:
-        _CHECKPOINT_USERS.pop(name, None)
+    # the plan is gone, so its checkpoint declaration no longer describes
+    # anything live
+    artifacts.forget_checkpoints(name)
     return len(keys)
-
-
-# Persisted-intermediate registry (VERDICT r9 item 4): plans that persist
-# a shared subtree register the handle under the query being built, so the
-# harness (bench.py between measurements, tests) can return the session's
-# cached-block footprint to baseline instead of accumulating dozens of
-# pinned RDDs across a 163-query run. graph.py's iterative pins manage
-# their own lifetime internally and don't use this.
-_PINNED: dict[str, list[DataFrame]] = {}
-_PINNED_LOCK = threading.Lock()
-
-
-class _Building(threading.local):
-    """Per-thread query-name stack: bench.py's threaded throughput pass
-    builds plans concurrently (e.g. after clear_plan_cache), and a shared
-    stack would let one thread's pin register under another thread's
-    query name. thread-local keeps attribution exact with no locking on
-    the hot path."""
-
-    def __init__(self) -> None:
-        self.stack: list[str] = []
-
-
-_BUILDING = _Building()
-
-
-def pin(df: DataFrame) -> DataFrame:
-    """persist() + register the handle for :func:`release_pins`. Use for
-    an expensive subtree referenced more than once in the SAME returned
-    plan; the pin stays alive while the query is measured and is released
-    by the harness afterwards (re-executing the memoized plan after a
-    release is still correct — just recomputes the subtree)."""
-    stack = _BUILDING.stack
-    name = stack[-1] if stack else "__anon__"
-    with _PINNED_LOCK:
-        _PINNED.setdefault(name, []).append(df.persist())
-    return df
-
-
-# name -> checkpointed RDD ids for the query's CURRENT build, or None
-# when a kernel declared plan-lifetime blocks without capturing ids
-# (legacy note_checkpoint_blocks() path). Reset per build (the `query`
-# wrapper pops the entry on every plan-cache miss) so the registry
-# reflects the plan as built NOW, not historical builds (ADVICE r13).
-_CHECKPOINT_USERS: dict[str, set[int] | None] = {}
-
-
-def _register_checkpoint(ids: set[int] | None) -> None:
-    stack = _BUILDING.stack
-    name = stack[-1] if stack else "__anon__"
-    with _PINNED_LOCK:
-        cur = _CHECKPOINT_USERS.get(name, set())
-        if ids is None or cur is None:
-            _CHECKPOINT_USERS[name] = None
-        else:
-            _CHECKPOINT_USERS[name] = cur | ids
-
-
-def note_checkpoint_blocks() -> None:
-    """Structural checkpoint-lifetime declaration (VERDICT r12 item 4):
-    kernels that ``localCheckpoint`` intermediates whose blocks live as
-    long as the RETURNED plan call this while the plan is being built.
-    Lifetime gates then KNOW a query's post-release leftovers are
-    plan-managed checkpoint blocks — released only when the plan itself
-    is dropped and GC'd. Prefer :func:`plan_checkpoint`, which also
-    captures WHICH block ids are plan-managed so the gate can still
-    flag a genuine pin() leak in checkpoint-using queries (ADVICE r13);
-    this bare form marks the query's block set as unknown (gate goes
-    lenient). Attribution uses the thread-local build stack."""
-    _register_checkpoint(None)
-
-
-def plan_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``localCheckpoint`` an intermediate AND register the resulting
-    block ids as plan-lifetime under the query being built. The id
-    capture diffs the session's persistent-RDD set around the
-    checkpoint — exact in a single-threaded build; a concurrent build on
-    another thread can at worst attribute its own fresh blocks here too,
-    which only widens the gate's tolerated set (never hides a leak in
-    the single-threaded gate run)."""
-    sc = df.sparkSession.sparkContext
-    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    out = df.localCheckpoint(eager=eager)
-    after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    _register_checkpoint(after - before)
-    return out
-
-
-def at_rest(df: DataFrame) -> DataFrame:
-    """Materialize an AT-REST ARTIFACT: eager localCheckpoint executes
-    the build once and truncates lineage, so every consumer references a
-    leaf RDD — the semantics of a stored table (incremental queries'
-    artifacts ARE yesterday's persisted outputs). Load-bearing for plan
-    size, not just fidelity: chaining artifact-on-artifact through lazy
-    pins re-embeds each build subtree at every reference (q192's first
-    cut produced a combinatorial ~24 MB logical plan that Catalyst
-    re-optimized on EVERY action); leaf RDDs keep the returned plan
-    proportional to the merge logic itself. Blocks are plan-lifetime
-    (released when the plan is dropped and GC'd) — self-declared with
-    their ids via the structural checkpoint registry."""
-    return plan_checkpoint(df, eager=True)
-
-
-def checkpoint_users() -> frozenset[str]:
-    """Queries that self-declared plan-lifetime checkpoint blocks (only
-    populated for plans BUILT in this session — build before asking)."""
-    with _PINNED_LOCK:
-        return frozenset(_CHECKPOINT_USERS)
-
-
-def checkpoint_ids(name: str) -> frozenset[int] | None:
-    """The plan-lifetime block ids `name`'s current build declared, or
-    None when any declaration came through the id-less legacy path."""
-    with _PINNED_LOCK:
-        ids = _CHECKPOINT_USERS.get(name)
-        return None if ids is None else frozenset(ids)
-
-
-def release_pins(name: str | None = None, blocking: bool = False) -> int:
-    """Unpersist every handle pinned by `name` (or by all queries when
-    None). Returns the number of handles released. ``blocking=False``
-    (the default) is the harness hot path; the count-based lifetime test
-    passes ``blocking=True`` because an async unpersist can land AFTER a
-    later baseline snapshot and deflate it mid-measurement."""
-    with _PINNED_LOCK:
-        names = [name] if name is not None else list(_PINNED)
-        handles = [df for q in names for df in _PINNED.pop(q, [])]
-    n = 0
-    for df in handles:
-        try:
-            df.unpersist(blocking)
-            n += 1
-        except Exception:
-            pass
-    return n
 
 
 def query(name: str, oracle: str | None = None):
@@ -232,16 +104,8 @@ def query(name: str, oracle: str | None = None):
                 if df is not None:
                     _PLAN_CACHE.move_to_end(key)
                     return df
-            # fresh build: reset the query's checkpoint declaration so the
-            # registry reflects THIS plan (a refactor that drops checkpoint
-            # usage stops being grandfathered in — ADVICE r13)
-            with _PINNED_LOCK:
-                _CHECKPOINT_USERS.pop(name, None)
-            _BUILDING.stack.append(name)
-            try:
+            with artifacts.building(name):
                 df = fn(spark, sf_dir)
-            finally:
-                _BUILDING.stack.pop()
             with _PLAN_CACHE_LOCK:
                 _PLAN_CACHE[key] = df
                 cap = _plan_cache_cap()

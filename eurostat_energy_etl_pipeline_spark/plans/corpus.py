@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from eurostat_energy_etl_pipeline_spark.artifacts import session_table
 from eurostat_energy_etl_pipeline_spark.catalog import load_tables
 from eurostat_energy_etl_pipeline_spark.functions import (
     exact_sum,
@@ -571,30 +572,22 @@ def q62(spark, sf_dir):
     )
 
 
-# At-rest near-dup index memo per (session, sf_dir): the index write is the
-# amortized once-per-corpus ingest step; queries probe it read-only.
-_ND_INDEX: dict[tuple[str, str], str] = {}
-
-
 def _neardup_index_path(spark, sf_dir: str) -> str:
-    import hashlib
-    import tempfile
-
+    """At-rest near-dup index per (session, sf_dir): the index write is the
+    amortized once-per-corpus ingest step; queries probe it read-only."""
     from eurostat_energy_etl_pipeline_spark.operators.dedup import (
         write_minhash_index,
     )
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    path = _ND_INDEX.get(key)
-    if path is None:
-        tag = hashlib.md5(f"{app}:{sf_dir}".encode()).hexdigest()[:12]
-        path = f"{tempfile.gettempdir()}/spark_graft_nd_index_{tag}"
-        t = load_tables(spark, sf_dir)
-        corpus = t["documents"].where(F.col("doc_id") % 5 != 0)
-        write_minhash_index(corpus, path)
-        _ND_INDEX[key] = path
-    return path
+    return session_table(
+        spark,
+        sf_dir,
+        "nd_index",
+        lambda path: write_minhash_index(
+            load_tables(spark, sf_dir)["documents"].where(F.col("doc_id") % 5 != 0),
+            path,
+        ),
+    )
 
 
 @query(
@@ -1748,28 +1741,17 @@ def q110(spark, sf_dir):
     )
 
 
-# Maintained-index memo per (session, sf_dir): base index on ~2/3 of the
-# corpus, then ONE merge_into_minhash_index batch (adds + sentinel text
-# updates + tombstones) — q111 probes the POST-maintenance index, so its
-# oracle certifies the maintenance end-to-end.
-_MAINT_INDEX: dict = {}
-
-
 def _maintained_index_path(spark, sf_dir: str) -> str:
-    import hashlib
-    import tempfile
-
+    """Maintained index per (session, sf_dir): base index on ~2/3 of the
+    corpus, then ONE merge_into_minhash_index batch (adds + sentinel text
+    updates + tombstones) — q111 probes the POST-maintenance index, so its
+    oracle certifies the maintenance end-to-end."""
     from eurostat_energy_etl_pipeline_spark.operators.dedup import (
         merge_into_minhash_index,
         write_minhash_index,
     )
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    path = _MAINT_INDEX.get(key)
-    if path is None:
-        tag = hashlib.md5(f"{app}:{sf_dir}".encode()).hexdigest()[:12]
-        path = f"{tempfile.gettempdir()}/spark_graft_maint_index_{tag}"
+    def write(path: str) -> None:
         docs = load_tables(spark, sf_dir)["documents"]
         write_minhash_index(
             docs.where(F.col("doc_id") % 3 != 0), path, num_buckets=16
@@ -1789,8 +1771,8 @@ def _maintained_index_path(spark, sf_dir: str) -> str:
         merge_into_minhash_index(
             spark, path, upserts=upserts, tombstone_ids=tombstones
         )
-        _MAINT_INDEX[key] = path
-    return path
+
+    return session_table(spark, sf_dir, "maint_index", write)
 
 
 @query(

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from eurostat_energy_etl_pipeline_spark.artifacts import session_table
 from eurostat_energy_etl_pipeline_spark.catalog import load_tables
 from eurostat_energy_etl_pipeline_spark.functions import (
     exact_sum,
@@ -3322,7 +3323,6 @@ def q_stream_hll(spark, sf_dir):
 # split), then MERGED with the post-split delta by every q178 call — the
 # q152/q111 build-once-merge-many shape applied to dimension maintenance.
 _SCD2_SPLIT = "2024-01-20"
-_SCD2_BASE: dict[tuple[str, str], str] = {}
 
 
 def _daily_status(ev):
@@ -3373,29 +3373,13 @@ def _scd2_rows(status_days):
 
 
 def _scd2_base_path(spark, sf_dir: str) -> str:
-    import hashlib
-    import tempfile
-
-    import shutil
-
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    # evict entries keyed by stopped SparkContexts AND remove their temp
-    # parquet dirs — the _PREPARED_GRAPHS stale-appId pattern plus disk
-    # cleanup, so repeated sessions don't leak scd2_base_* dirs in tempdir
-    # (ADVICE r11)
-    for stale in [k for k in _SCD2_BASE if k[0] != app]:
-        shutil.rmtree(_SCD2_BASE.pop(stale), ignore_errors=True)
-    path = _SCD2_BASE.get(key)
-    if path is None:
-        tag = hashlib.md5(f"{app}:{sf_dir}:scd2".encode()).hexdigest()[:12]
-        path = f"{tempfile.gettempdir()}/spark_graft_scd2_base_{tag}"
+    def write(path: str) -> None:
         ev = load_tables(spark, sf_dir)["events"].where(
             F.col("ts").cast("date") <= F.lit(_SCD2_SPLIT).cast("date")
         )
         _scd2_rows(_daily_status(ev)).write.mode("overwrite").parquet(path)
-        _SCD2_BASE[key] = path
-    return path
+
+    return session_table(spark, sf_dir, "scd2_base", write)
 
 
 @query(

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from eurostat_energy_etl_pipeline_spark.artifacts import session_value
 from eurostat_energy_etl_pipeline_spark.catalog import load_tables
 from eurostat_energy_etl_pipeline_spark.functions import presentation_sort
 from eurostat_energy_etl_pipeline_spark import plans
@@ -45,12 +46,6 @@ _G = 1e12
 
 def _grid(col):
     return F.floor(col * _G + 0.5) / _G
-
-
-#: q99's prepared graph per (applicationId, sf_dir) — the T4
-#: session-lifetime cache pattern (catalog.cached_view), held here
-#: because the cached value is a (DataFrame, DataFrame, int) triple.
-_PREPARED_GRAPHS: dict[tuple[str, str], tuple[DataFrame, DataFrame, int]] = {}
 
 
 # --- order-isomorphic int64 node ids (r15, guide §2.3 narrower types) ---
@@ -108,16 +103,10 @@ def _dec_node(enc) -> "F.Column":
 def _shared_purchase_graph(spark, sf_dir: str):
     """The symmetric customer-supplier purchase graph shared by
     q99/q172/q189, prepared once per (session, sf_dir) with
-    :func:`prepare_graph` and cached under the T4 contract. Nodes are
+    :func:`prepare_graph` and kept as a session value. Nodes are
     the order-isomorphic int64 encodings (see :func:`_enc_node`)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    # Evict entries from previous SparkContexts (r6 advice): after a
-    # session restart in the same process the old keys reference
-    # DataFrames of a stopped context and can never be hit again.
-    for stale in [k for k in _PREPARED_GRAPHS if k[0] != key[0]]:
-        del _PREPARED_GRAPHS[stale]
-    prepared = _PREPARED_GRAPHS.get(key)
-    if prepared is None:
+
+    def build():
         t = load_tables(spark, sf_dir)
         e0 = (
             t["orders"]
@@ -131,9 +120,9 @@ def _shared_purchase_graph(spark, sf_dir: str):
         edges = e0.unionByName(
             e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        prepared = prepare_graph(edges)
-        _PREPARED_GRAPHS[key] = prepared
-    return prepared
+        return prepare_graph(edges)
+
+    return session_value(spark, sf_dir, "purchase_graph", build)
 
 
 def prepare_graph(

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from eurostat_energy_etl_pipeline_spark.artifacts import session_table, session_value
 from eurostat_energy_etl_pipeline_spark.catalog import load_tables
 from eurostat_energy_etl_pipeline_spark.functions import (
     ordered_output,
@@ -619,35 +620,34 @@ def _ivf_oracle_sql(
     )
 
 
-# At-rest IVF index memo per (session, sf_dir): built once by
-# write_ivf_index (cell-partitioned corpus + stored centroids), probed by
-# every later q37 call — the build-once-probe-many shape of q63.
-_IVF_INDEX: dict[tuple[str, str], str] = {}
+def _ivf_centroids(spark, sf_dir: str):
+    """Trained coarse quantizer per (session, corpus): the float (q37) and
+    SQ8 (q80) layouts share it — training is deterministic, so this only
+    skips the duplicate sample scan + Lloyd's pass on the second index
+    write."""
+    return session_value(
+        spark,
+        sf_dir,
+        "ivf_centroids",
+        lambda: S.train_ivf_centroids(load_tables(spark, sf_dir)["embeddings"], nlist=16),
+    )
 
 
 def _ivf_index_path(spark, sf_dir: str) -> str:
-    import hashlib
-    import tempfile
-
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    path = _IVF_INDEX.get(key)
-    if path is None:
-        tag = hashlib.md5(f"{app}:{sf_dir}".encode()).hexdigest()[:12]
-        path = f"{tempfile.gettempdir()}/spark_graft_ivf_index_{tag}"
-        t = load_tables(spark, sf_dir)
-        cents = S.write_ivf_index(
-            t["embeddings"], path, nlist=16, centroids=_IVF_CENTROIDS.get(key)
-        )
-        _IVF_CENTROIDS[key] = cents
-        _IVF_INDEX[key] = path
-    return path
-
-
-# Trained coarse quantizer per (session, corpus): the float (q37) and SQ8
-# (q80) layouts share it — training is deterministic, so this only skips
-# the duplicate sample scan + Lloyd's pass on the second index write.
-_IVF_CENTROIDS: dict = {}
+    """At-rest IVF index, written once per (session, sf_dir) by
+    write_ivf_index (cell-partitioned corpus + stored centroids), probed by
+    every later q37 call — the build-once-probe-many shape of q63."""
+    return session_table(
+        spark,
+        sf_dir,
+        "ivf_index",
+        lambda path: S.write_ivf_index(
+            load_tables(spark, sf_dir)["embeddings"],
+            path,
+            nlist=16,
+            centroids=_ivf_centroids(spark, sf_dir),
+        ),
+    )
 
 
 @query("q37_ivf_ann", oracle=_ivf_oracle_sql())
@@ -1047,31 +1047,19 @@ def q79(spark, sf_dir):
     )
 
 
-_IVF_SQ8_INDEX: dict = {}
-
-
 def _ivf_sq8_index_path(spark, sf_dir: str) -> str:
-    import hashlib
-    import tempfile
-
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    path = _IVF_SQ8_INDEX.get(key)
-    if path is None:
-        tag = hashlib.md5(f"{app}:{sf_dir}:sq8".encode()).hexdigest()[:12]
-        path = f"{tempfile.gettempdir()}/spark_graft_ivf_sq8_index_{tag}"
-        t = load_tables(spark, sf_dir)
-        fkey = (app, sf_dir)
-        cents = S.write_ivf_index(
-            t["embeddings"],
+    return session_table(
+        spark,
+        sf_dir,
+        "ivf_sq8_index",
+        lambda path: S.write_ivf_index(
+            load_tables(spark, sf_dir)["embeddings"],
             path,
             nlist=16,
             quantize=True,
-            centroids=_IVF_CENTROIDS.get(fkey),
-        )
-        _IVF_CENTROIDS[fkey] = cents
-        _IVF_SQ8_INDEX[key] = path
-    return path
+            centroids=_ivf_centroids(spark, sf_dir),
+        ),
+    )
 
 
 @query("q80_ivf_sq8_ann", oracle=_ivf_oracle_sql(sq8=True))
@@ -2474,24 +2462,14 @@ def q159(spark, sf_dir):
     )
 
 
-# Maintained IVF index memo per (session, sf_dir): base index trained and
-# written on ~2/3 of the embeddings, then ONE merge_into_ivf_index batch
-# (adds + deterministically-transformed updates + tombstones) — q160
-# probes the POST-maintenance index, so its oracle certifies the
-# maintenance end-to-end (the q111 pattern on the vector side).
-_MAINT_IVF: dict = {}
-
-
 def _maintained_ivf_path(spark, sf_dir: str) -> str:
-    import hashlib
-    import tempfile
+    """Maintained IVF index per (session, sf_dir): base index trained and
+    written on ~2/3 of the embeddings, then ONE merge_into_ivf_index batch
+    (adds + deterministically-transformed updates + tombstones) — q160
+    probes the POST-maintenance index, so its oracle certifies the
+    maintenance end-to-end (the q111 pattern on the vector side)."""
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    path = _MAINT_IVF.get(key)
-    if path is None:
-        tag = hashlib.md5(f"{app}:{sf_dir}:maint".encode()).hexdigest()[:12]
-        path = f"{tempfile.gettempdir()}/spark_graft_ivf_maint_{tag}"
+    def write(path: str) -> None:
         e = load_tables(spark, sf_dir)["embeddings"]
         base = e.where(F.col("vec_id") % 3 != 2)
         S.write_ivf_index(base, path, nlist=16)
@@ -2503,8 +2481,8 @@ def _maintained_ivf_path(spark, sf_dir: str) -> str:
         S.merge_into_ivf_index(
             spark, path, upserts=adds.unionByName(upd), tombstone_ids=tomb
         )
-        _MAINT_IVF[key] = path
-    return path
+
+    return session_table(spark, sf_dir, "ivf_maint", write)
 
 
 # Oracle corpus CTEs for q160: the trainer saw the BASE subset's original
@@ -2931,7 +2909,7 @@ def q186(spark, sf_dir):
     # kernel decodes every payload, so recomputing it per branch would
     # multiply the scan 10+x (caught by the plan gate). The CC kernel
     # self-declares its plan-lifetime checkpoint blocks
-    # (plans.note_checkpoint_blocks), so the pin gate releases this pin
+    # (plans.plan_checkpoint), so the pin gate releases this pin
     # and tolerates exactly those blocks.
     sigs = pin(
         media_signatures(media).join(
@@ -3233,28 +3211,19 @@ def q193(spark, sf_dir):
     return funnel.transform(presentation_sort, "stage")
 
 
-# Maintained at-rest BM25 posting index memo per (session, sf_dir): base
-# index on ~2/3 of the documents, then ONE merge batch (adds + text
-# updates + tombstones) — q164 searches the POST-maintenance index, so
-# its oracle certifies the generational-delete maintenance end-to-end
-# (the q111/q160 pattern on the retrieval side; all three at-rest index
-# families now carry a MERGE path).
-_MAINT_POSTINGS: dict = {}
 _POSTINGS_UPDATE_SUFFIX = " merged update token"
 
 
 def _maintained_postings_path(spark, sf_dir: str) -> str:
-    import hashlib
-    import tempfile
-
+    """Maintained at-rest BM25 posting index per (session, sf_dir): base
+    index on ~2/3 of the documents, then ONE merge batch (adds + text
+    updates + tombstones) — q164 searches the POST-maintenance index, so
+    its oracle certifies the generational-delete maintenance end-to-end
+    (the q111/q160 pattern on the retrieval side; all three at-rest index
+    families now carry a MERGE path)."""
     from eurostat_energy_etl_pipeline_spark.rag import bm25 as BM
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    path = _MAINT_POSTINGS.get(key)
-    if path is None:
-        tag = hashlib.md5(f"{app}:{sf_dir}:post".encode()).hexdigest()[:12]
-        path = f"{tempfile.gettempdir()}/spark_graft_postings_{tag}"
+    def write(path: str) -> None:
         docs = load_tables(spark, sf_dir)["documents"]
         base = docs.where(F.col("doc_id") % 3 != 2)
         BM.write_postings_index(base, path)
@@ -3269,8 +3238,8 @@ def _maintained_postings_path(spark, sf_dir: str) -> str:
         BM.merge_into_postings_index(
             spark, path, upserts=adds.unionByName(upd), tombstone_ids=tomb
         )
-        _MAINT_POSTINGS[key] = path
-    return path
+
+    return session_table(spark, sf_dir, "postings", write)
 
 
 def _q164_oracle() -> str:

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from eurostat_energy_etl_pipeline_spark.artifacts import session_table
 from eurostat_energy_etl_pipeline_spark.catalog import load_tables
 from eurostat_energy_etl_pipeline_spark.functions import (
     exact_avg,
@@ -1503,26 +1504,15 @@ def q138_bloom_join(spark, sf_dir):
     )
 
 
-# At-rest materialized partial-aggregate per (session, sf_dir): written
-# once by q152's first call, merged with the delta by every later call —
-# the build-once-merge-many shape of q63's dedup index applied to
-# incremental view maintenance.
-_MV_BASE: dict[tuple[str, str], str] = {}
-
-
 def _mv_base_path(spark, sf_dir: str) -> str:
-    import hashlib
-    import tempfile
+    """At-rest materialized partial-aggregate per (session, sf_dir): written
+    once by q152's first call, merged with the delta by every later call —
+    the build-once-merge-many shape of q63's dedup index applied to
+    incremental view maintenance."""
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    path = _MV_BASE.get(key)
-    if path is None:
-        tag = hashlib.md5(f"{app}:{sf_dir}:mv".encode()).hexdigest()[:12]
-        path = f"{tempfile.gettempdir()}/spark_graft_mv_base_{tag}"
-        t = load_tables(spark, sf_dir)
+    def write(path: str) -> None:
         (
-            t["orders"]
+            load_tables(spark, sf_dir)["orders"]
             .where(F.year("o_orderdate") <= 1996)
             .groupBy("o_custkey")
             .agg(
@@ -1534,8 +1524,8 @@ def _mv_base_path(spark, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(path)
         )
-        _MV_BASE[key] = path
-    return path
+
+    return session_table(spark, sf_dir, "mv_base", write)
 
 
 @query(

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from eurostat_energy_etl_pipeline_spark.artifacts import session_value
 from eurostat_energy_etl_pipeline_spark.functions.parallelism import widen_if_narrow
 from eurostat_energy_etl_pipeline_spark.operators.text import (
     ENGLISH_STOPWORDS,
@@ -129,18 +130,17 @@ def bm25_search(index: DataFrame, query: str, k: int = 5) -> DataFrame:
     )
 
 
-# Index memo per (session, corpus path) — same contract as tfidf's T4 cache.
-_BM25_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def documents_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BM25_CACHE.get(key)
-    if hit is None:
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        hit = build_bm25_index(docs, "text", "doc_id")
-        _BM25_CACHE[key] = hit
-    return hit
+    """Build-once BM25 index over the documents fixture (a session value,
+    like tfidf's T4 index)."""
+    return session_value(
+        spark,
+        sf_dir,
+        "bm25_index",
+        lambda: build_bm25_index(
+            spark.read.parquet(f"{sf_dir}/documents.parquet"), "text", "doc_id"
+        ),
+    )
 
 
 SEARCH_QUERY = "spark shuffle join performance"

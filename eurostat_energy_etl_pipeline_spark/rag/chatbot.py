@@ -10,28 +10,27 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from eurostat_energy_etl_pipeline_spark.artifacts import session_value
 from eurostat_energy_etl_pipeline_spark.plans.insights import insights_table
 from eurostat_energy_etl_pipeline_spark.rag.tfidf import semantic_search
 
 RISING_WORDS = ("rising", "increasing", "growing")
 GEP_WORDS = ("gep", "gross electricity")
 
-# BM25 index memo for the chatbot's insights corpus, keyed like
-# bm25.documents_bm25_index — build_bm25_index caches its result DataFrame,
-# so rebuilding per question would leak one cached index into executor
-# storage per call; the corpus is deterministic per (session, sf_dir).
-_INSIGHTS_BM25_CACHE: dict[tuple[str, str], "object"] = {}
-
-
 def _insights_bm25_index(spark: SparkSession, sf_dir: str, corpus):
+    """BM25 index over the insights corpus, a session value like
+    bm25.documents_bm25_index: build_bm25_index caches its result
+    DataFrame, so rebuilding per question would leak one cached index into
+    executor storage per call; the corpus is deterministic per (session,
+    sf_dir)."""
     from eurostat_energy_etl_pipeline_spark.rag.bm25 import build_bm25_index
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _INSIGHTS_BM25_CACHE.get(key)
-    if hit is None:
-        hit = build_bm25_index(corpus, "text", "doc_id")
-        _INSIGHTS_BM25_CACHE[key] = hit
-    return hit
+    return session_value(
+        spark,
+        sf_dir,
+        "insights_bm25_index",
+        lambda: build_bm25_index(corpus, "text", "doc_id"),
+    )
 
 
 def route(question: str) -> str:

@@ -804,9 +804,9 @@ def test_pinned_intermediates_release_to_baseline(spark, queries):
 
     # EVERY pin-using query — no exclusions. Queries whose kernels
     # localCheckpoint plan-lifetime intermediates (connected_components,
-    # BFS levels, own-lifetime pagerank) self-declare via
-    # plans.note_checkpoint_blocks() during build; the loop below reads
-    # that registry instead of a hand-maintained exclusion list
+    # BFS levels, own-lifetime pagerank) self-declare their block ids via
+    # plans.plan_checkpoint() during build; the loop below reads that
+    # registry instead of a hand-maintained exclusion list
     # (VERDICT r12 item 4): pins must still fully release for them, but
     # their declared checkpoint blocks may legitimately outlive the
     # release (freed only when the plan itself is dropped and GC'd).
@@ -846,7 +846,7 @@ def test_pinned_intermediates_release_to_baseline(spark, queries):
 
     for name in pin_users:
         # Warm pass: build + execute once so any lazily-built cached views
-        # (catalog._VIEW_CACHE) the query needs exist BEFORE the baseline
+        # (catalog.cached_view) the query needs exist BEFORE the baseline
         # snapshot, then drain ALL pins synchronously. The comparison is
         # by RDD-ID SET, not count: unrelated persistent entries can
         # disappear at any moment (ContextCleaner GC-unpersists cached
@@ -873,16 +873,14 @@ def test_pinned_intermediates_release_to_baseline(spark, queries):
             # are checkpointed intermediates the LIVE plan still
             # references — but ONLY those. plan_checkpoint captured the
             # declared block ids, so a genuine pin() leak in a
-            # checkpoint-using query still fails here (ADVICE r13);
-            # ids=None (legacy bare declaration) stays lenient.
+            # checkpoint-using query still fails here (ADVICE r13).
             declared = P.checkpoint_ids(name)
-            if declared is not None:
-                stray = leftover - declared
-                assert not stray, (
-                    f"{name}: release_pins left cached blocks {stray} that "
-                    "are NOT declared plan-lifetime checkpoint blocks "
-                    f"(declared: {sorted(declared)})"
-                )
+            stray = leftover - declared
+            assert not stray, (
+                f"{name}: release_pins left cached blocks {stray} that "
+                "are NOT declared plan-lifetime checkpoint blocks "
+                f"(declared: {sorted(declared)})"
+            )
             # Drop every reference (local + plan cache) so
             # ContextCleaner can GC-release the checkpoint blocks —
             # full release while the plan lives is impossible by

@@ -286,10 +286,7 @@ def test_ab_test_statistics_are_consistent(spark):
 def test_ivm_merge_equals_recompute_and_reuses_mv(spark, tmp_path):
     from pyspark.sql import functions as F
 
-    from eurostat_energy_etl_pipeline_spark.plans.relational import (
-        _MV_BASE,
-        q152,
-    )
+    from eurostat_energy_etl_pipeline_spark.plans.relational import q152
 
     rows = [
         # custkey 1: base 2 orders (100, 200), delta 1 order (50)
@@ -309,14 +306,18 @@ def test_ivm_merge_equals_recompute_and_reuses_mv(spark, tmp_path):
     assert got[1]["n_orders"] == 3 and got[1]["total"] == 350.0
     assert got[2]["n_orders"] == 1 and got[2]["total"] == 400.0
     assert got[1]["avg_price"] == round(350.0 / 3, 6)
-    # the at-rest MV was memoized for this (session, sf_dir)
-    key = (spark.sparkContext.applicationId, str(tmp_path))
-    assert key in _MV_BASE
+    # the at-rest MV was memoized for this (session, sf_dir): the store
+    # hands back its path without calling a writer
+    from eurostat_energy_etl_pipeline_spark import artifacts
+
+    path = artifacts.session_table(
+        spark, str(tmp_path), "mv_base", lambda p: pytest.fail("base not memoized")
+    )
     import os
 
-    mtime = os.path.getmtime(_MV_BASE[key])
+    mtime = os.path.getmtime(path)
     q152(spark, str(tmp_path)).collect()  # second call: merge only
-    assert os.path.getmtime(_MV_BASE[key]) == mtime  # base not rewritten
+    assert os.path.getmtime(path) == mtime  # base not rewritten
 
 
 def test_decayed_leaderboard_exact_weights(spark, tmp_path):

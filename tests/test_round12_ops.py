@@ -152,17 +152,17 @@ def test_q165_tie_flags_earliest_day_only(spark, tmp_path):
 
 
 def test_scd2_base_cache_evicts_stale_appids(spark, tmp_path, monkeypatch):
-    """_SCD2_BASE entries keyed by a stopped SparkContext are evicted on
-    the next build AND their temp parquet dirs removed (ADVICE r11 —
-    the _PREPARED_GRAPHS pattern plus disk cleanup)."""
+    """An SCD2 base stored under a stopped SparkContext is evicted on the
+    next build (ADVICE r11). Its files live in that context's SparkFiles
+    root, which Spark deletes on stop (tests/test_artifacts.py checks
+    that)."""
     import os
 
+    from eurostat_energy_etl_pipeline_spark import artifacts
     from eurostat_energy_etl_pipeline_spark.plans import events as ev_mod
 
-    stale_dir = tmp_path / "stale_scd2_base"
-    stale_dir.mkdir()
-    (stale_dir / "marker").write_text("x")
-    ev_mod._SCD2_BASE[("app-from-a-dead-context", "/nowhere")] = str(stale_dir)
+    stale = ("app-from-a-dead-context", "/nowhere", "scd2_base")
+    artifacts._VALUES[stale] = "/nowhere/spark_graft_scd2_base"
 
     rows = [
         (1, "2024-01-05 10:00:00", 1, "click", 1.0, ""),
@@ -171,8 +171,7 @@ def test_scd2_base_cache_evicts_stale_appids(spark, tmp_path, monkeypatch):
     _write_events(spark, tmp_path, rows)
     path = ev_mod._scd2_base_path(spark, str(tmp_path))
     assert os.path.isdir(path)
-    assert ("app-from-a-dead-context", "/nowhere") not in ev_mod._SCD2_BASE
-    assert not stale_dir.exists()
+    assert stale not in artifacts._VALUES
     # the live entry survives a second call (build-once contract)
     assert ev_mod._scd2_base_path(spark, str(tmp_path)) == path
 
